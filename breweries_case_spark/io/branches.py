@@ -53,6 +53,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from breweries_case_spark.io.reader import read_parquet
 from breweries_case_spark.io.snapshots import (
     _MAX_COMMIT_RETRIES,
     _read_manifest,
@@ -216,8 +217,8 @@ def read_branch(
     for val, files in sorted(m["partitions"].items()):
         if not files:
             continue
-        pdf = spark.read.parquet(
-            *[os.path.join(table_dir, f) for f in files]
+        pdf = read_parquet(
+            spark, *[os.path.join(table_dir, f) for f in files]
         )
         parts.append(pdf.withColumn(pcol, F.lit(val)))
     if not parts:

@@ -59,6 +59,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from breweries_case_spark.io.reader import read_parquet
+
 _MANIFEST_DIR = "_manifests"
 _MAX_COMMIT_RETRIES = 20
 #: vacuum only sweeps publish sidecars at least this stale — younger ones
@@ -235,7 +237,7 @@ def read_snapshot(
     for val, files in sorted(items):
         if not files:
             continue
-        pdf = spark.read.parquet(*[os.path.join(table_dir, f) for f in files])
+        pdf = read_parquet(spark, *[os.path.join(table_dir, f) for f in files])
         parts.append(pdf.withColumn(pcol, F.lit(val)))
     if not parts:
         raise ValueError(
@@ -279,8 +281,8 @@ def compact_partitions(
         out_dir = os.path.join(
             table_dir, "data", commit_id, f"{pcol}={val}"
         )
-        spark.read.parquet(
-            *[os.path.join(table_dir, f) for f in files]
+        read_parquet(
+            spark, *[os.path.join(table_dir, f) for f in files]
         ).coalesce(target_files).write.parquet(out_dir)
         new_files = sorted(
             os.path.join("data", commit_id, f"{pcol}={val}", f)
@@ -344,8 +346,8 @@ def snapshot_diff(
             files = partitions.get(val) or []
             if files:
                 parts.append(
-                    spark.read.parquet(
-                        *[os.path.join(table_dir, f) for f in files]
+                    read_parquet(
+                        spark, *[os.path.join(table_dir, f) for f in files]
                     ).withColumn(pcol, F.lit(val))
                 )
         if not parts:

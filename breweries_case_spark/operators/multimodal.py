@@ -78,7 +78,8 @@ def synth_media_table(
     function needs). Rows are identical to filtering the full table."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     if modality is not None:
-        d = d.filter(F.col("doc_id") % 3 == MODALITIES.index(modality))
+        # pmod, not %: matches the generator's Python ``%`` for every integer
+        d = d.filter(F.pmod(F.col("doc_id"), 3) == MODALITIES.index(modality))
 
     def run(batches):
         for pdf in batches:

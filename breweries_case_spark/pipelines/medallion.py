@@ -41,12 +41,7 @@ from breweries_case_spark.io.writer import (
     read_partitioned,
     write_partition_overwrite,
 )
-from breweries_case_spark.schemas import (
-    BREWERY_PAYLOAD_SCHEMA,
-    BRONZE_SCHEMA,
-    GOLD_SCHEMA,
-    SILVER_SCHEMA,
-)
+from breweries_case_spark.schemas import BREWERY_PAYLOAD_SCHEMA, BRONZE_SCHEMA
 
 
 def ingest_to_bronze(
@@ -90,17 +85,26 @@ def bronze_to_silver(bronze: DataFrame, extraction_date: _dt.date) -> DataFrame:
     return cleaned.filter(F.col("id").isNotNull() & (F.col("id") != ""))
 
 
+def _nonempty(df: DataFrame) -> DataFrame | None:
+    """``df``, or None when it holds no rows. Only for frames read back
+    from files: on the Python-RDD bronze frame the ``limit(1)`` job stops
+    its Python workers mid-stream (BrokenPipe tracebacks in the driver
+    log), so bronze emptiness is decided from the driver-side records."""
+    return None if df.isEmpty() else df
+
+
 def _persist_layer(
-    df: DataFrame, path: str, extraction_date: _dt.date
+    df: DataFrame | None, path: str, extraction_date: _dt.date
 ) -> None:
-    """Replace the date's partition with ``df``. Dynamic overwrite only
-    rewrites partitions PRESENT in the written data — so an empty rerun
-    (e.g. every record failed the validity gate) would silently leave the
-    previous run's partition on disk. Deleting the partition directory
-    explicitly in that case keeps the rerun-replaces-the-date contract
-    unconditional. (The Iceberg writer gets this for free:
-    overwritePartitions of an empty frame is an explicit delete.)"""
-    if df.isEmpty():
+    """Replace the date's partition with ``df`` (None: no rows). Dynamic
+    overwrite only rewrites partitions PRESENT in the written data — so an
+    empty rerun (e.g. every record failed the validity gate) would
+    silently leave the previous run's partition on disk. Deleting the
+    partition directory explicitly in that case keeps the
+    rerun-replaces-the-date contract unconditional. (The Iceberg writer
+    gets this for free: overwritePartitions of an empty frame is an
+    explicit delete.)"""
+    if df is None:
         part_dir = os.path.join(
             path, f"extraction_date={extraction_date.isoformat()}"
         )
@@ -151,23 +155,24 @@ def run_medallion(
             "run_medallion writes via driver-local filesystem APIs; got "
             f"{base_path!r}. Use write_iceberg for object-store targets."
         )
-    bronze = ingest_to_bronze(spark, records, extraction_date)
+    records = list(records)
+    bronze = (
+        ingest_to_bronze(spark, records, extraction_date) if records else None
+    )
     _persist_layer(bronze, f"{base_path}/bronze", extraction_date)
     bronze_n = _count_partition(spark, f"{base_path}/bronze", extraction_date)
 
+    silver = None
     if bronze_n:
         bronze_t = read_partitioned(spark, f"{base_path}/bronze")
-        silver = bronze_to_silver(bronze_t, extraction_date)
-    else:
-        silver = spark.createDataFrame([], SILVER_SCHEMA)
+        silver = _nonempty(bronze_to_silver(bronze_t, extraction_date))
     _persist_layer(silver, f"{base_path}/silver", extraction_date)
     silver_n = _count_partition(spark, f"{base_path}/silver", extraction_date)
 
+    gold = None
     if silver_n:
         silver_t = read_partitioned(spark, f"{base_path}/silver")
-        gold = silver_to_gold(silver_t, extraction_date)
-    else:
-        gold = spark.createDataFrame([], GOLD_SCHEMA)
+        gold = _nonempty(silver_to_gold(silver_t, extraction_date))
     _persist_layer(gold, f"{base_path}/gold", extraction_date)
 
     return {
@@ -227,9 +232,10 @@ def run_medallion_snapshotted(
 
     day = extraction_date.isoformat()
 
-    def persist(df: DataFrame, layer: str) -> str:
+    def persist(df: DataFrame | None, layer: str) -> str:
+        """Commit ``df`` as the day's partition; None (no rows) deletes it."""
         tdir = f"{base_path}/{layer}"
-        if df.isEmpty():
+        if df is None:
             if latest_version(tdir) is not None:
                 commit_delete_partitions(tdir, [day])
         else:
@@ -261,21 +267,22 @@ def run_medallion_snapshotted(
             return 0
         return day.count()
 
-    bronze = ingest_to_bronze(spark, records, extraction_date)
+    records = list(records)
+    bronze = (
+        ingest_to_bronze(spark, records, extraction_date) if records else None
+    )
     bdir = persist(bronze, "bronze")
     bronze_n = count_day(bdir)
 
+    silver = None
     if bronze_n:
-        silver = bronze_to_silver(read_layer(bdir), extraction_date)
-    else:
-        silver = spark.createDataFrame([], SILVER_SCHEMA)
+        silver = _nonempty(bronze_to_silver(read_layer(bdir), extraction_date))
     sdir = persist(silver, "silver")
     silver_n = count_day(sdir)
 
+    gold = None
     if silver_n:
-        gold = silver_to_gold(read_layer(sdir), extraction_date)
-    else:
-        gold = spark.createDataFrame([], GOLD_SCHEMA)
+        gold = _nonempty(silver_to_gold(read_layer(sdir), extraction_date))
     gdir = persist(gold, "gold")
 
     return {

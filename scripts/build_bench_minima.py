@@ -27,6 +27,8 @@ BENCH_SF = 0.1
 #: no longer exists. Blob sources are dated by their commit time; clean
 #: working-tree files by the commit that last touched them; dirty or
 #: untracked working-tree files are undated (always current plan).
+#: Each id appears once, under its LATEST reset; a later plan change
+#: supersedes the earlier entry rather than adding a second key.
 FLOOR_RESETS = {
     # r11: containment verify-recount prune + needs-frame pin (3ca51fb);
     # training-mix stage hand-off checkpoints (3980fe2)
@@ -36,7 +38,6 @@ FLOOR_RESETS = {
     # (cd22cec) — every id whose MinHash leg changed plans
     "q_dedup_minhash": 1786892378,
     "q_dedup_levenshtein_bounded": 1786892378,
-    "q_dedup_clusters_bounded": 1786892378,
     # r13: neutral bench warmup — the two formerly warmed-first ids were
     # benched as hot SECOND runs through r12, so their floors measure a
     # different protocol, not a different plan; re-seed under the
@@ -57,7 +58,6 @@ FLOOR_RESETS = {
     "q_dedup_keeper_priority": 1786977807,
     "q_dedup_keeper_pii": 1786977807,
     "q_dedup_clusters_star": 1786977807,
-    "q_dedup_clusters_bounded": 1786977807,
     "q_entity_resolution": 1786977807,
     "q_dedup_image_clusters": 1786977807,
     "q_dedup_media_clusters": 1786977807,
@@ -67,8 +67,6 @@ FLOOR_RESETS = {
     "q_dedup_cluster_chain": 1786977807,
     "q_dedup_cluster_chain_persisted": 1786977807,
     "q_dedup_video_cluster_incremental": 1786977807,
-    "q_dedup_text_cluster_incremental": 1786977807,
-    "q_dedup_text_keeper": 1786977807,
     # r13 optimization round, commit 4f3d8f4: interval sweep single-scan
     # explode; incremental decontaminator zero-exchange posting +
     # broadcast-anti cap + broadcast-gated id joins
@@ -79,9 +77,6 @@ FLOOR_RESETS = {
     # regexp literal re-encode (bpe_apply_rules_regex) — every benched
     # BPE id runs a new per-round topology
     "q_bpe_merge_apply": 1786984673,
-    "q_bpe_train_k": 1786984673,
-    "q_bpe_oov_report": 1786984673,
-    "q_bpe_drift_report": 1786984673,
     # r14 optimization round, commit c5092c0: interval-overlap count
     # routed through the sweep line + same-key correction (zero joins);
     # text maintainer family on ONE shared MinHash signature pass with
