@@ -87,19 +87,34 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     key = _schema_key(spark, paths)
     if key is None:
         return spark.read.parquet(*paths)
-    with _schemas_lock:
-        memo = _schemas.setdefault(spark, OrderedDict())
-        schema = memo.get(key)
-        if schema is not None:
-            memo.move_to_end(key)
+    schema = _memo_get(spark, key)
     if schema is not None:
         return spark.read.schema(schema).parquet(*paths)
     df = spark.read.parquet(*paths)
+    _memo_put(spark, key, df.schema)
+    return df
+
+
+def _memo_get(spark: SparkSession, key: tuple | None):
+    """The memo entry under ``key`` (None: absent or unkeyable read)."""
+    if key is None:
+        return None
     with _schemas_lock:
-        memo[key] = df.schema
+        memo = _schemas.setdefault(spark, OrderedDict())
+        value = memo.get(key)
+        if value is not None:
+            memo.move_to_end(key)
+    return value
+
+
+def _memo_put(spark: SparkSession, key: tuple | None, value) -> None:
+    if key is None:
+        return
+    with _schemas_lock:
+        memo = _schemas.setdefault(spark, OrderedDict())
+        memo[key] = value
         if len(memo) > _MAX_SCHEMAS:
             memo.popitem(last=False)
-    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -122,17 +137,28 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     factory pins and the epoch values DuckDB reads from the same file)."""
     from pyspark.sql.types import LongType, TimestampNTZType
 
-    try:
-        df = read_parquet(spark, path)
-    except Exception as e:
-        # Nanos path: unsupported type fails at footer-schema resolution.
-        # Retry under nanosAsLong ONLY for that failure — a missing file,
-        # corrupt footer, or permission error re-raises as itself rather
-        # than surfacing as a confusing second failure with the original
-        # cause discarded.
-        markers = ("PARQUET_TYPE_ILLEGAL", "Illegal Parquet type", "NANOS")
-        if not any(m in str(e) for m in markers):
-            raise
+    # a file whose plain read already failed as NANOS goes straight to the
+    # retry: the memo remembers it under the plain read's key, so a repeat
+    # starts no failing inference job (nor logs its ERROR trace)
+    key = _schema_key(spark, (path,))
+    nanos_key = None if key is None else ("nanosAsLong retry", key)
+    df = None
+    cause = None
+    if _memo_get(spark, nanos_key) is None:
+        try:
+            df = read_parquet(spark, path)
+        except Exception as e:
+            # Nanos path: unsupported type fails at footer-schema
+            # resolution. Retry under nanosAsLong ONLY for that failure —
+            # a missing file, corrupt footer, or permission error
+            # re-raises as itself rather than surfacing as a confusing
+            # second failure with the original cause discarded.
+            markers = ("PARQUET_TYPE_ILLEGAL", "Illegal Parquet type", "NANOS")
+            if not any(m in str(e) for m in markers):
+                raise
+            cause = e
+            _memo_put(spark, nanos_key, True)
+    if df is None:
         # Conf is captured into the relation at read time (verified: the
         # scan still executes after restore), so save/restore keeps it from
         # leaking into later unrelated nanos-parquet reads on this session.
@@ -142,7 +168,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
             try:
                 df = read_parquet(spark, path)
             except Exception as retry_err:
-                raise retry_err from e
+                raise retry_err from cause
         finally:
             if prior is None:
                 spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")

@@ -53,6 +53,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -152,6 +153,8 @@ def stage_partition_files(
             for f in os.listdir(pdir)
             if f.endswith(".parquet")
         )
+    if not touched:  # no rows: nothing to publish, leave no empty dir
+        shutil.rmtree(stage, ignore_errors=True)
     return touched
 
 
@@ -160,9 +163,20 @@ def commit_overwrite_partitions(
 ) -> int:
     """Atomically commit ``df`` with dynamic partition-overwrite
     semantics; returns the new version number."""
-    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-    touched = stage_partition_files(df, table_dir, partition_col)
+    return publish_overwrite(
+        table_dir, stage_partition_files(df, table_dir, partition_col),
+        partition_col,
+    )
 
+
+def publish_overwrite(
+    table_dir: str, touched: dict[str, list[str]], partition_col: str
+) -> int:
+    """Publish the next version with the partitions ``touched`` (as
+    returned by ``stage_partition_files``) pointing at their staged
+    files and every other partition carried forward; returns the new
+    version number."""
+    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
     for _ in range(_MAX_COMMIT_RETRIES):
         base = latest_version(table_dir)
         partitions = (

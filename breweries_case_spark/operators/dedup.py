@@ -251,7 +251,10 @@ def broadcast_if_small(
     here is usually a derived select/distinct, which the old code
     computed twice (once for the count job, once again inside the
     consuming join). The count now materializes the checkpoint and the
-    join reads it back, whichever side of the gate wins (guide §1.3)."""
+    join reads it back, whichever side of the gate wins (guide §1.3).
+    So pass the un-checkpointed derived frame: the helper checkpoints it
+    itself, and a frame the caller already checkpointed would be stored
+    twice."""
     mat = df.localCheckpoint(eager=False)
     return F.broadcast(mat) if mat.count() <= max_rows else mat
 

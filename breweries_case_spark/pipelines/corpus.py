@@ -25,6 +25,14 @@ Design contract — the three properties a production corpus store needs:
   a failed update leaves the previous snapshot intact (the snapshot
   log's O_EXCL commit contract).
 
+Audit counts come from the jobs that already materialize the rows: the
+gate-flagged shard, the near-dup drop set and the accepted set are each
+checkpointed once with their counts observed (``Observation``) at the
+root of the checkpointed frame, read after the checkpoint returns. Root
+only: the optimizer and AQE prune an observed node below an empty
+filter, limit or join side, and ``Observation.get`` on a pruned node
+never returns.
+
 Reference analog: the medallion daily-rerun contract
 (`src/processors/breweries_bronze_processors.py:133,149-153`) applied
 to corpus curation instead of brewery ingest."""
@@ -47,6 +55,7 @@ from breweries_case_spark.operators.training_mix import (
     content_fingerprint,
     quality_mask,
 )
+from breweries_case_spark.pipelines.medallion import _counted
 
 #: snapshot tables inside a corpus directory
 DOCS_TABLE = "docs"
@@ -56,25 +65,26 @@ FP_TABLE = "fingerprints"
 LSH_TABLE = "lsh_buckets"
 
 
-def _quality_gate(shard: DataFrame) -> DataFrame:
-    """The q_training_mix stage-1 gate, by shared expression — see
-    training_mix.quality_mask."""
-    return shard.filter(quality_mask())
+def _flagged(shard: DataFrame, bench_grams: DataFrame | None) -> DataFrame:
+    """``shard`` plus ``_keep``: the doc passes the q_training_mix stage-1
+    gate (training_mix.quality_mask) and, given ``bench_grams``, shares no
+    3-gram with the benchmark set (the q_decontaminate contract; bench
+    side is eval-suite-sized → broadcast). Flagged, not filtered, so one
+    materialization counts both the input and the gated docs."""
+    keep = quality_mask()
+    if bench_grams is not None:
+        from breweries_case_spark.operators.text import _ngram_rows
 
-
-def _decontaminate(shard: DataFrame, bench_grams: DataFrame) -> DataFrame:
-    """Drop shard docs sharing any 3-gram with the benchmark set (the
-    q_decontaminate contract; bench side is eval-suite-sized →
-    broadcast)."""
-    from breweries_case_spark.operators.text import _ngram_rows
-
-    contaminated = (
-        _ngram_rows(shard, 3)
-        .join(F.broadcast(bench_grams.select("g").distinct()), "g", "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
-    return shard.join(contaminated, "doc_id", "left_anti")
+        contaminated = (
+            _ngram_rows(shard.filter(keep), 3)
+            .join(F.broadcast(bench_grams.select("g").distinct()), "g", "left_semi")
+            .select("doc_id")
+            .distinct()
+            .withColumn("_hit", F.lit(True))
+        )
+        shard = shard.join(contaminated, "doc_id", "left")
+        keep = keep & F.col("_hit").isNull()
+    return shard.withColumn("_keep", keep).drop("_hit")
 
 
 def _shingles(df: DataFrame) -> DataFrame:
@@ -242,11 +252,14 @@ def update_corpus(
     docs_dir = os.path.join(corpus_dir, DOCS_TABLE)
     fp_dir = os.path.join(corpus_dir, FP_TABLE)
 
-    n_in = shard.count()
-    gated = _quality_gate(shard)
-    if bench_grams is not None:
-        gated = _decontaminate(gated, bench_grams)
-    n_gated = gated.count()
+    # materialized once, counts observed at its root: every later stage
+    # reads it, never re-decontaminates
+    flagged, n_in, n_gated = _counted(
+        _flagged(shard, bench_grams),
+        lambda d: d.localCheckpoint(),
+        F.col("_keep"),
+    )
+    gated = flagged.filter("_keep").drop("_keep")
 
     # within-shard exact dedup: keep-min doc_id per fingerprint
     with_fp = gated.withColumn("fp", content_fingerprint())
@@ -282,19 +295,19 @@ def update_corpus(
         near_drop, shard_banded = _near_dup_shard_ids(
             spark, fresh, corpus_dir, shard_date
         )
-        # tiny id set, consumed by the count AND the anti-join — cut the
-        # probe/verify lineage so it runs once
-        near_drop = near_drop.localCheckpoint()
-        n_near_dropped = near_drop.count()
+        # tiny id set: cut the probe/verify lineage so it runs once
+        near_drop, n_near_dropped = _counted(
+            near_drop, lambda d: d.localCheckpoint()
+        )
         fresh = fresh.join(near_drop, "doc_id", "left_anti")
 
-    # materialize the accepted set ONCE: the counts and the 2-3 table
-    # commits below would otherwise each re-run the full gate → dedup →
-    # near-dup lineage (the probe joins are the expensive part)
-    accepted = fresh.withColumn(
-        "shard_date", F.lit(shard_date)
-    ).localCheckpoint()
-    n_accepted = accepted.count()
+    # materialize the accepted set ONCE: the 2-3 table commits below would
+    # otherwise each re-run the dedup → near-dup lineage (the probe joins
+    # are the expensive part)
+    accepted, n_accepted = _counted(
+        fresh.withColumn("shard_date", F.lit(shard_date)),
+        lambda d: d.localCheckpoint(),
+    )
 
     def _commit(df, table_dir):
         """Overwrite the shard_date partition — including the

@@ -20,9 +20,16 @@ semantics its tests pin down (FIXTURES.md), re-expressed Spark-first:
   itself is wanted.
 
 The three stage functions are side-effect-free plan builders; persistence
-and sequencing live only in ``run_medallion``, the one entry that writes
-(the reference wraps the equivalent stages in thin Airflow DAGs; any
-scheduler works).
+and sequencing live only in ``run_medallion`` (and its snapshot-log twin),
+the entries that write (the reference wraps the equivalent stages in thin
+Airflow DAGs; any scheduler works).
+
+Audit counts come from the job that writes each layer: the written frame
+carries a row-count ``Observation`` at its root, read once the write has
+returned, so no count, emptiness probe or read-back job runs. Root only:
+the optimizer and AQE may prune an observed node that sits under an empty
+filter, limit or join side, and ``Observation.get`` on a pruned node
+never returns. The root of a frame being written is never pruned.
 """
 
 from __future__ import annotations
@@ -31,9 +38,10 @@ import datetime as _dt
 import json
 import os
 import shutil
-from collections.abc import Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from breweries_case_spark.functions import clean_text, digits_only
@@ -53,11 +61,32 @@ def ingest_to_bronze(
 
     Driver-side by design, exactly like the reference's API ingest
     (``breweries_bronze_processors.py:139-146``): the payload arrives on
-    the driver from a REST API. For bulk backfills use
-    ``spark.read.json`` over staged payload files instead — this path is
-    for the api-page-sized daily ingest."""
-    data = [(json.dumps(dict(r)), extraction_date) for r in records]
-    return spark.createDataFrame(data, BRONZE_SCHEMA)
+    the driver from a REST API. The rows are handed to Spark as one Arrow
+    table, a local relation that needs no Python workers to scan. For bulk
+    backfills use ``spark.read.json`` over staged payload files instead —
+    this path is for the api-page-sized daily ingest."""
+    raw = [json.dumps(dict(r)) for r in records]
+    table = pa.table(
+        {
+            "raw_json": pa.array(raw, pa.string()),
+            "extraction_date": pa.array(
+                [extraction_date] * len(raw), pa.date32()
+            ),
+        }
+    )
+    return spark.createDataFrame(table, BRONZE_SCHEMA)
+
+
+def _counted(df: DataFrame, action: Callable[[DataFrame], object], *conds):
+    """``(action(df), rows, *rows_where)``: run the action that materializes
+    ``df``; the rows it materialized, then those where each of ``conds``
+    holds, are observed at the root of the frame the action runs (module
+    docstring), so counting starts no job."""
+    obs = Observation()
+    counts = [F.count(F.lit(1)).alias("n")]
+    counts += [F.count_if(c).alias(f"n{i}") for i, c in enumerate(conds)]
+    out = action(df.observe(obs, *counts))
+    return (out, *obs.get.values())
 
 
 def bronze_to_silver(bronze: DataFrame, extraction_date: _dt.date) -> DataFrame:
@@ -85,47 +114,26 @@ def bronze_to_silver(bronze: DataFrame, extraction_date: _dt.date) -> DataFrame:
     return cleaned.filter(F.col("id").isNotNull() & (F.col("id") != ""))
 
 
-def _nonempty(df: DataFrame) -> DataFrame | None:
-    """``df``, or None when it holds no rows. Only for frames read back
-    from files: on the Python-RDD bronze frame the ``limit(1)`` job stops
-    its Python workers mid-stream (BrokenPipe tracebacks in the driver
-    log), so bronze emptiness is decided from the driver-side records."""
-    return None if df.isEmpty() else df
-
-
 def _persist_layer(
     df: DataFrame | None, path: str, extraction_date: _dt.date
-) -> None:
-    """Replace the date's partition with ``df`` (None: no rows). Dynamic
-    overwrite only rewrites partitions PRESENT in the written data — so an
-    empty rerun (e.g. every record failed the validity gate) would
-    silently leave the previous run's partition on disk. Deleting the
-    partition directory explicitly in that case keeps the
-    rerun-replaces-the-date contract unconditional. (The Iceberg writer
-    gets this for free: overwritePartitions of an empty frame is an
-    explicit delete.)"""
-    if df is None:
+) -> int:
+    """Replace the date's partition with ``df`` (None: no rows); returns
+    the rows written. Dynamic overwrite only rewrites partitions PRESENT
+    in the written data — so an empty rerun (e.g. every record failed the
+    validity gate) would silently leave the previous run's partition on
+    disk. Deleting the partition directory explicitly when no row was
+    written keeps the rerun-replaces-the-date contract unconditional.
+    (The Iceberg writer gets this for free: overwritePartitions of an
+    empty frame is an explicit delete.)"""
+    n = 0
+    if df is not None:
+        _, n = _counted(df, lambda d: write_partition_overwrite(d, path))
+    if n == 0:
         part_dir = os.path.join(
             path, f"extraction_date={extraction_date.isoformat()}"
         )
         shutil.rmtree(part_dir, ignore_errors=True)
-    else:
-        write_partition_overwrite(df, path)
-
-
-def _count_partition(
-    spark: SparkSession, path: str, extraction_date: _dt.date
-) -> int:
-    from pyspark.errors import AnalysisException
-
-    if not os.path.exists(path):
-        return 0
-    try:
-        table = read_partitioned(spark, path)
-    except AnalysisException:
-        # directory exists but holds no data files (every partition cleared)
-        return 0
-    return table.filter(F.col("extraction_date") == F.lit(extraction_date)).count()
+    return n
 
 
 def run_medallion(
@@ -142,14 +150,14 @@ def run_medallion(
     all three layers, including replacing them with NOTHING when the rerun
     yields no valid rows (see _persist_layer). Returns the per-layer row
     counts the reference logs as its audit
-    (``breweries_bronze_processors.py:155`` — computed here from the
-    written data, not by re-running the plan).
+    (``breweries_bronze_processors.py:155`` — observed on each layer's
+    own write job, not by re-running the plan).
 
-    LOCAL-FILESYSTEM paths only: the empty-rerun partition cleanup and
-    the audit counts use driver-local file APIs. For object stores /
-    lakehouse catalogs use ``io.writer.write_iceberg`` per layer —
-    Iceberg's overwritePartitions gives the same contract
-    transactionally. Guarded loudly rather than silently no-opping."""
+    LOCAL-FILESYSTEM paths only: the empty-rerun partition cleanup uses
+    driver-local file APIs. For object stores / lakehouse catalogs use
+    ``io.writer.write_iceberg`` per layer — Iceberg's overwritePartitions
+    gives the same contract transactionally. Guarded loudly rather than
+    silently no-opping."""
     if "://" in base_path and not base_path.startswith("file://"):
         raise ValueError(
             "run_medallion writes via driver-local filesystem APIs; got "
@@ -159,27 +167,20 @@ def run_medallion(
     bronze = (
         ingest_to_bronze(spark, records, extraction_date) if records else None
     )
-    _persist_layer(bronze, f"{base_path}/bronze", extraction_date)
-    bronze_n = _count_partition(spark, f"{base_path}/bronze", extraction_date)
+    bronze_n = _persist_layer(bronze, f"{base_path}/bronze", extraction_date)
 
     silver = None
     if bronze_n:
         bronze_t = read_partitioned(spark, f"{base_path}/bronze")
-        silver = _nonempty(bronze_to_silver(bronze_t, extraction_date))
-    _persist_layer(silver, f"{base_path}/silver", extraction_date)
-    silver_n = _count_partition(spark, f"{base_path}/silver", extraction_date)
+        silver = bronze_to_silver(bronze_t, extraction_date)
+    silver_n = _persist_layer(silver, f"{base_path}/silver", extraction_date)
 
     gold = None
     if silver_n:
         silver_t = read_partitioned(spark, f"{base_path}/silver")
-        gold = _nonempty(silver_to_gold(silver_t, extraction_date))
-    _persist_layer(gold, f"{base_path}/gold", extraction_date)
-
-    return {
-        "bronze": bronze_n,
-        "silver": silver_n,
-        "gold": _count_partition(spark, f"{base_path}/gold", extraction_date),
-    }
+        gold = silver_to_gold(silver_t, extraction_date)
+    gold_n = _persist_layer(gold, f"{base_path}/gold", extraction_date)
+    return {"bronze": bronze_n, "silver": silver_n, "gold": gold_n}
 
 
 def silver_to_gold(
@@ -225,68 +226,51 @@ def run_medallion_snapshotted(
     stage consumes it."""
     from breweries_case_spark.io.snapshots import (
         commit_delete_partitions,
-        commit_overwrite_partitions,
         latest_version,
+        publish_overwrite,
         read_snapshot,
+        stage_partition_files,
     )
 
     day = extraction_date.isoformat()
 
-    def persist(df: DataFrame | None, layer: str) -> str:
-        """Commit ``df`` as the day's partition; None (no rows) deletes it."""
+    def persist(df: DataFrame | None, layer: str) -> int:
+        """Commit ``df`` as the day's partition and return the rows it
+        wrote; no rows (or None) deletes the partition."""
         tdir = f"{base_path}/{layer}"
-        if df is None:
-            if latest_version(tdir) is not None:
-                commit_delete_partitions(tdir, [day])
-        else:
-            commit_overwrite_partitions(df, tdir, "extraction_date")
-        return tdir
-
-    def read_layer(tdir: str) -> DataFrame | None:
-        if latest_version(tdir) is None:
-            return None
-        try:
-            snap = read_snapshot(spark, tdir)
-        except ValueError:  # snapshot exists but holds zero partitions
-            return None
-        return snap.withColumn(
-            "extraction_date", F.col("extraction_date").cast("date")
-        )
-
-    def count_day(tdir: str) -> int:
-        if latest_version(tdir) is None:
-            return 0
-        try:
-            # manifest-level prune: only the day's own partition is ever
-            # listed or read — a read-all-then-filter would pay O(history)
-            # file I/O per layer per run, growing with table age
-            day = read_snapshot(
-                spark, tdir, partitions=[str(extraction_date)]
+        touched, n = {}, 0
+        if df is not None:
+            touched, n = _counted(
+                df,
+                lambda d: stage_partition_files(d, tdir, "extraction_date"),
             )
-        except ValueError:  # day absent (or table holds zero partitions)
-            return 0
-        return day.count()
+        if n:
+            publish_overwrite(tdir, touched, "extraction_date")
+        elif latest_version(tdir) is not None:
+            commit_delete_partitions(tdir, [day])
+        return n
+
+    def read_layer(layer: str) -> DataFrame:
+        """The day's partition of a layer that just committed rows, pruned
+        at the manifest level (no other partition is listed or planned)."""
+        return read_snapshot(
+            spark, f"{base_path}/{layer}", partitions=[day]
+        ).withColumn("extraction_date", F.col("extraction_date").cast("date"))
 
     records = list(records)
     bronze = (
         ingest_to_bronze(spark, records, extraction_date) if records else None
     )
-    bdir = persist(bronze, "bronze")
-    bronze_n = count_day(bdir)
-
+    bronze_n = persist(bronze, "bronze")
     silver = None
     if bronze_n:
-        silver = _nonempty(bronze_to_silver(read_layer(bdir), extraction_date))
-    sdir = persist(silver, "silver")
-    silver_n = count_day(sdir)
-
+        silver = bronze_to_silver(read_layer("bronze"), extraction_date)
+    silver_n = persist(silver, "silver")
     gold = None
     if silver_n:
-        gold = _nonempty(silver_to_gold(read_layer(sdir), extraction_date))
-    gdir = persist(gold, "gold")
-
+        gold = silver_to_gold(read_layer("silver"), extraction_date)
     return {
         "bronze": bronze_n,
         "silver": silver_n,
-        "gold": count_day(gdir),
+        "gold": persist(gold, "gold"),
     }
